@@ -8,6 +8,9 @@ Usage:
     python bench_extra.py phases          # phase-isolated kg_pipeline timings
     python bench_extra.py plans [tag]     # write plans/r06/<q>_<tag>.txt
     python bench_extra.py query NAME      # time one query with noop sink
+
+Runs at local[N] with N shuffle partitions; N = $SPARK_GRAFT_CPUS, else
+the CPU count `nproc` reports.
 """
 
 from __future__ import annotations
@@ -19,7 +22,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# default: the CPUs this process may run on (what `nproc` reports)
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 BENCH_QUERIES = [
     "kg_triples", "kg_triples_global", "kg_mentions", "kg_entity_degree",

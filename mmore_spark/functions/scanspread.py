@@ -10,105 +10,56 @@ of the corpus (every payload byte crosses the network once) applied to a
 scan that is already thousands of partitions wide.
 
 ``needs_spread`` keeps the repartition ONLY when the scan is actually
-narrow.  The input-file list is driver-side metadata (no job): every
-file is at least one scan split, and local files contribute
-``ceil(size / maxPartitionBytes)`` splits — the same split arithmetic
-Spark's own file-scan planner applies, so the sum tracks the scan's real
-parallelism for splittable columnar sources (parquet, the only scan
-format in this repo).  Non-splittable compressed files (gzip text)
-would be over-estimated; route those through an explicit repartition at
-the read site, not this gate.  When the bound already reaches the
-session's default parallelism, the input flows through unchanged and the
-shuffle disappears from the plan.  Inputs with no backing files
-(in-memory local relations in unit tests) keep the historical spread —
-they are tiny by construction.  A wrong decision is perf-only in both
-directions: results never depend on the partitioning.
+narrow.  The width is Spark's own answer: ``getNumPartitions`` of the
+input RDD of each file scan in the frame's physical plan — the planner's
+split sizing and small-file bin-packing, for local and remote URIs alike,
+with no job.  Only the file scans count: a frame that unions a one-file
+corpus with a small generated relation is still carried by its one scan
+partition.  When the width already reaches the session's default
+parallelism, the input flows through unchanged and the shuffle disappears
+from the plan.  Inputs with no file scan (in-memory local relations in
+unit tests) keep the historical spread — they are tiny by construction.
+A wrong decision is perf-only in both directions: results never depend on
+the partitioning.
 
-The probe costs ~20-100 ms of driver metadata per call, so callers that
-can name their input (e.g. the sf_dir) pass ``cache_key`` and pay once
-per application: the decision is cached per (applicationId, cache_key).
-A path whose contents are REPLACED mid-session keeps its first decision
-(perf-only; Spark's own session file-listing cache has the same
-semantics) — callers that rewrite their input should omit ``cache_key``.
+Planning the scan costs ~20-80 ms of driver time per fresh frame, so
+callers that can name their input (e.g. the sf_dir) pass ``cache_key``
+and pay once per application: the decision is cached per (applicationId,
+cache_key).  A path whose contents are REPLACED mid-session keeps its
+first decision (perf-only; Spark's own session file-listing cache has the
+same semantics) — callers that rewrite their input should omit
+``cache_key``.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
-
-_DEFAULT_SPLIT_BYTES = 128 * 1024 * 1024
-
-_UNIT = {"": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,
-         "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40,
-         "tb": 1 << 40}
 
 _decision_cache: dict[tuple[str, str], bool] = {}
 
 
-def _parse_bytes(raw: str) -> int | None:
-    """'134217728b' / '256m' / '1g' → bytes; None when unparseable."""
-    s = raw.strip().lower()
-    digits = ""
-    for ch in s:
-        if ch.isdigit():
-            digits += ch
-        else:
-            break
-    unit = s[len(digits):].strip()
-    if not digits or unit not in _UNIT:
-        return None
-    return int(digits) * _UNIT[unit]
-
-
-def _max_partition_bytes(spark) -> int:
-    try:
-        raw = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    except Exception:
-        return _DEFAULT_SPLIT_BYTES
-    return _parse_bytes(raw) or _DEFAULT_SPLIT_BYTES
-
-
-def estimated_scan_partitions(df: DataFrame) -> int | None:
-    """Lower bound on the scan parallelism of ``df``'s file sources, from
-    driver metadata only.  None = no backing files (pure local input)."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    split = _max_partition_bytes(df.sparkSession)
-    total = 0
-    for uri in files:
-        n = 1
-        path = uri[7:] if uri.startswith("file://") else (
-            uri[5:] if uri.startswith("file:") else None)
-        if path is not None:
-            try:
-                n = max(1, -(-os.path.getsize(path) // split))
-            except OSError:
-                n = 1
-        total += n
-    return total
+def scan_partitions(df: DataFrame) -> int | None:
+    """Input partitions Spark plans for ``df``'s file scans (metadata
+    only, no job).  None = no file scan (pure local input)."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    widths = [leaf.inputRDD().getNumPartitions()
+              for leaf in (leaves.apply(i) for i in range(leaves.size()))
+              if leaf.getClass().getSimpleName() == "FileSourceScanExec"]
+    return sum(widths) if widths else None
 
 
 def needs_spread(df: DataFrame, cache_key: str | None = None) -> bool:
     """True when ``df``'s file scan is narrower than the session default
     parallelism (or has no file scan at all) and should be repartitioned."""
     spark = df.sparkSession
-    parallelism = spark.sparkContext.defaultParallelism
-    if cache_key is not None:
-        key = (spark.sparkContext.applicationId, cache_key)
-        narrow = _decision_cache.get(key)
-        if narrow is None:
-            est = estimated_scan_partitions(df)
-            narrow = est is None or est < parallelism
+    key = None if cache_key is None else (spark.sparkContext.applicationId, cache_key)
+    narrow = _decision_cache.get(key)
+    if narrow is None:
+        width = scan_partitions(df)
+        narrow = width is None or width < spark.sparkContext.defaultParallelism
+        if key is not None:
             _decision_cache[key] = narrow
-        return narrow
-    est = estimated_scan_partitions(df)
-    return est is None or est < parallelism
+    return narrow
 
 
 def spread_small_scan(df: DataFrame, cache_key: str | None = None) -> DataFrame:

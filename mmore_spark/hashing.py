@@ -33,12 +33,6 @@ def h60(col: Column | str, seed: str = "") -> Column:
     return F.conv(F.substring(F.md5(payload), 1, HEX_DIGITS), 16, 10).cast("long")
 
 
-def h60_sql(expr: str, seed: str = "") -> str:
-    """DuckDB SQL fragment computing the same hash of string expression."""
-    payload = f"(CAST({expr} AS VARCHAR) || '{seed}')" if seed else f"CAST({expr} AS VARCHAR)"
-    return f"CAST(('0x' || substr(md5({payload}), 1, {HEX_DIGITS})) AS BIGINT)"
-
-
 def h60_py(value: str, seed: str = "") -> int:
     """Plain-Python twin (used by the golden-fixture oracle)."""
     return int(hashlib.md5((str(value) + seed).encode("utf-8")).hexdigest()[:HEX_DIGITS], 16)

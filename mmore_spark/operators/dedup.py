@@ -10,9 +10,10 @@ carries k rows and the self-join emits k(k-1)/2 pairs inside ONE task
 (quadratic work AND a straggler).  Boilerplate families of 10^4+ are
 routine in web corpora.
 
-``candidate_edges`` therefore caps bucket fan-out: buckets at or below
-``max_bucket`` emit all pairs (exact n_shared counts); larger buckets
-emit STAR edges to the bucket's min doc_id — k-1 rows instead of
+``star_capped_pairs`` — the band join behind ``candidate_edges`` and the
+name LSH in operators/linking — therefore caps bucket fan-out: buckets at
+or below ``max_bucket`` emit all pairs (exact n_shared counts); larger
+buckets emit STAR edges to the bucket's min doc_id — k-1 rows instead of
 k(k-1)/2.  For grouping (the production consumer: connected components →
 dedup groups) the star is semantics-EXACT: every member stays reachable
 from the keeper, so the component set is identical.  What is lost is only
@@ -108,39 +109,47 @@ def minhash_band_signatures(df: DataFrame, text_col: str = "text",
     return base.mapInPandas(sig_batches, schema=schema)
 
 
-def candidate_edges(sig: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFrame:
-    """(doc_id, band, bh) → (doc_a, doc_b, n_shared) candidate edges.
+def star_capped_pairs(sig: DataFrame, keys: list[str], id_col: str,
+                      out: tuple[str, str], max_bucket: int) -> DataFrame:
+    """The capped band self-join: (id_col, *keys) rows → (out_a, out_b)
+    pairs of ids sharing a bucket, one row per shared bucket.
 
-    Buckets with ≤ ``max_bucket`` rows: full self-join (exact pair counts,
-    identical to the uncapped plan).  Larger buckets: star edges to the
-    bucket min — linear output, no quadratic straggler task, component-
-    exact for downstream grouping (module docstring).  The oversized-key
-    set is tiny by construction (duplicate FAMILIES, not the corpus), so
-    it broadcasts; the normal path pays one extra map-side aggregate."""
+    Buckets with ≤ ``max_bucket`` rows: full self-join (out_a < out_b).
+    Larger buckets: star edges to the bucket min — linear output, no
+    quadratic straggler task, component-exact for downstream grouping
+    (module docstring).  The oversized-key set is tiny by construction
+    (duplicate FAMILIES, not the corpus), so it broadcasts; the normal
+    path pays one extra map-side aggregate.  ``sig`` is read three times:
+    callers persist it and keep their own final aggregate + checkpoint."""
+    sizes = sig.groupBy(*keys).agg(F.count("*").alias("_k"))
+    big_keys = sizes.filter(F.col("_k") > max_bucket).select(*keys)
+
+    normal = sig.join(F.broadcast(big_keys), keys, "left_anti")
+    a, b = normal.alias("a"), normal.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    pairs = (
+        a.join(b, on + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")])
+        .select(F.col(f"a.{id_col}").alias(out[0]), F.col(f"b.{id_col}").alias(out[1]))
+    )
+
+    fam = sig.join(F.broadcast(big_keys), keys, "left_semi")
+    mins = fam.groupBy(*keys).agg(F.min(id_col).alias("_m"))
+    stars = (
+        fam.join(F.broadcast(mins), keys)
+        .filter(F.col(id_col) != F.col("_m"))
+        .select(F.col("_m").alias(out[0]), F.col(id_col).alias(out[1]))
+    )
+    return pairs.unionByName(stars)
+
+
+def candidate_edges(sig: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFrame:
+    """(doc_id, band, bh) → (doc_a, doc_b, n_shared) candidate edges via
+    ``star_capped_pairs``: exact n_shared counts for buckets up to
+    ``max_bucket``, star edges above it."""
     sig = sig.persist()
     sig.count()  # one fill; read by sizes + both join branches
-    sizes = sig.groupBy("band", "bh").agg(F.count("*").alias("_k"))
-    big_keys = sizes.filter(F.col("_k") > max_bucket).select("band", "bh")
-
-    normal = sig.join(F.broadcast(big_keys), ["band", "bh"], "left_anti")
-    a, b = normal.alias("a"), normal.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.bh") == F.col("b.bh"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-    )
-
-    fam = sig.join(F.broadcast(big_keys), ["band", "bh"], "left_semi")
-    mins = fam.groupBy("band", "bh").agg(F.min("doc_id").alias("_m"))
-    stars = (
-        fam.join(F.broadcast(mins), ["band", "bh"])
-        .filter(F.col("doc_id") != F.col("_m"))
-        .select(F.col("_m").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-    )
-
     edges = (
-        pairs.unionByName(stars)
+        star_capped_pairs(sig, ["band", "bh"], "doc_id", ("doc_a", "doc_b"), max_bucket)
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").cast("long").alias("n_shared"))
         .localCheckpoint()  # materialize so the signature cache can be freed

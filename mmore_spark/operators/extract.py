@@ -109,74 +109,18 @@ def parse_records(raw: str) -> tuple[list[dict], list[dict]]:
 # Deterministic rule extractor (the pluggable "LLM")
 # --------------------------------------------------------------------------
 
-_EXTRACTOR_CACHE: list | None = None
-
-
-def _compiled_templates():
-    """Compile ONE combined regex for all relation templates (alternation
-    of per-template branches, each with alias-alternation capture groups)
-    so extraction is a single scan per document instead of 12.  Compiled
-    once per executor (the reference's model-caching pattern,
-    pdf_processor.py:37-68)."""
-    global _EXTRACTOR_CACHE
-    if _EXTRACTOR_CACHE is not None:
-        return _EXTRACTOR_CACHE
-    alias_type: dict[str, str] = {}
-    for etype, clusters in vocab.ALIAS_CLUSTERS.items():
-        for cluster in clusters:
-            for alias in cluster:
-                alias_type[alias] = etype
-    # longest-first so "Acme Corporation" wins over a would-be prefix
-    alternation = "|".join(re.escape(a) for a in sorted(alias_type, key=len, reverse=True))
-    branches = []
-    group_info: dict[int, tuple[str, float]] = {}  # subj group idx -> (pred, weight)
-    gi = 1
-    for tmpl, _st, _ot, pred, weight in vocab.RELATION_TEMPLATES:
-        head, rest = tmpl.split("{s}")
-        mid, tail = rest.split("{o}")
-        branches.append(
-            re.escape(head) + f"({alternation})" + re.escape(mid)
-            + f"({alternation})" + re.escape(tail)
-        )
-        group_info[gi] = (pred, weight)
-        gi += 2
-    combined = re.compile("|".join(f"(?:{b})" for b in branches))
-    _EXTRACTOR_CACHE = (combined, group_info, alias_type)
-    return _EXTRACTOR_CACHE
-
-
-def rule_extract_re(text: str) -> str:
-    """Reference implementation via the combined regex — kept as the
-    parity baseline for ``rule_extract`` (tests assert byte-equality)."""
-    combined, group_info, alias_type = _compiled_templates()
-    records: list[str] = []
-    for m in combined.finditer(text):
-        gi = m.lastindex - 1 if m.lastindex % 2 == 0 else m.lastindex
-        # lastindex is the highest matched group; subj group is the odd one
-        subj, obj = m.group(gi), m.group(gi + 1)
-        pred, weight = group_info[gi]
-        for name in (subj, obj):
-            etype = alias_type[name]
-            records.append(
-                f'("entity"{TUPLE_DELIM}{name}{TUPLE_DELIM}{etype}'
-                f"{TUPLE_DELIM}{entity_description(name, etype)})"
-            )
-        records.append(
-            f'("relationship"{TUPLE_DELIM}{subj}{TUPLE_DELIM}{obj}'
-            f"{TUPLE_DELIM}{pred}{TUPLE_DELIM}{weight})"
-        )
-    return RECORD_DELIM.join(records) + (RECORD_DELIM + COMPLETION_TAG if records else "")
-
-
 _FAST_CACHE: tuple | None = None
 
 
 def _fast_tables():
-    """Literal-scan tables for the exact finditer emulation below.
+    """Literal-scan tables for the relation templates, built once per
+    executor (the reference's model-caching pattern,
+    pdf_processor.py:37-68).
 
-    The combined pattern is an ordered alternation of branches, each of
-    shape ``escape(head) (ALT) escape(mid) (ALT) escape(tail)`` with ALT =
-    all aliases sorted longest-first.  Two structural facts make a literal
+    ``rule_extract`` emulates ``finditer`` over ONE combined regex: an
+    ordered alternation of per-template branches, each of shape
+    ``escape(head) (ALT) escape(mid) (ALT) escape(tail)`` with ALT = all
+    aliases sorted longest-first.  Two structural facts make a literal
     emulation exact: (1) at a FIXED position, at most one alias of a given
     length can match (slice equality), so trying length groups in
     descending order reproduces the alternation's longest-first ordered
@@ -185,21 +129,19 @@ def _fast_tables():
     global _FAST_CACHE
     if _FAST_CACHE is not None:
         return _FAST_CACHE
-    _combined, group_info, alias_type = _compiled_templates()
+    alias_type = {alias: etype for etype, clusters in vocab.ALIAS_CLUSTERS.items()
+                  for cluster in clusters for alias in cluster}
     # aliases grouped by length; lengths descending == alternation order
     # (ties within a length cannot both match at one position)
     by_len: dict[int, set[str]] = {}
     for a in alias_type:
         by_len.setdefault(len(a), set()).add(a)
     lens_desc = sorted(by_len, reverse=True)
-    from ..corpus import vocab as _v
-
     branches = []
-    for gi_idx, (tmpl, _st, _ot, _pred, _weight) in zip(
-            sorted(group_info), _v.RELATION_TEMPLATES):
+    for tmpl, _st, _ot, pred, weight in vocab.RELATION_TEMPLATES:
         head, rest = tmpl.split("{s}")
         mid, tail = rest.split("{o}")
-        branches.append((head, mid, tail, group_info[gi_idx]))
+        branches.append((head, mid, tail, (pred, weight)))
     _FAST_CACHE = (branches, by_len, lens_desc, alias_type)
     return _FAST_CACHE
 
@@ -241,11 +183,12 @@ def rule_extract(text: str) -> str:
     """Mention detection + record emission in the reference's delimited
     format (the deterministic stand-in for the LLM call).
 
-    Byte-identical to ``rule_extract_re`` (pytest parity suite) but ~100×
-    faster: the combined alternation regex backtracks through ~300 alias
-    alternatives at every text position (~4.5 ms/doc measured); this scans
-    for each template's literal mid with C-speed ``str.find`` and only
-    then emulates the regex's ordered-choice semantics around the hit."""
+    Byte-identical to the combined-regex ``finditer`` it emulates (pytest
+    parity suite) but ~100× faster: that alternation regex backtracks
+    through ~300 alias alternatives at every text position (~4.5 ms/doc
+    measured); this scans for each template's literal mid with C-speed
+    ``str.find`` and only then emulates the regex's ordered-choice
+    semantics around the hit."""
     branches, by_len, lens_desc, alias_type = _fast_tables()
     records: list[str] = []
     n = len(branches)
@@ -377,27 +320,19 @@ def extract_mentions_triples_chunked(documents: DataFrame,
     return mentions, triples
 
 
+def explode_combined(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(doc_id, entities, triples) → (mentions_df, triples_df), one row per
+    entity / triple.  Explode is a narrow op, so Catalyst pipelines it with
+    whatever produced ``combined``; reuse via cache is the caller's call."""
+    mentions = combined.select("doc_id", F.explode("entities").alias("e")).select(
+        "doc_id", *(F.col(f"e.{c}").alias(c) for c in MENTIONS_SCHEMA.names[1:]))
+    triples = combined.select("doc_id", F.explode("triples").alias("t")).select(
+        "doc_id", *(F.col(f"t.{c}").alias(c) for c in TRIPLES_SCHEMA.names[1:]))
+    return mentions, triples
+
+
 def extract_mentions_triples(df: DataFrame, text_col: str = "text",
                              extractor: Extractor | None = None
                              ) -> tuple[DataFrame, DataFrame]:
-    """Full stage: returns (mentions_df, triples_df).
-
-    The combined frame is computed once; explode is a narrow op so Catalyst
-    pipelines it with the Arrow stage — reuse via cache is the caller's
-    call (plans/pipeline.py persists it between the two explodes).
-    """
-    combined = extract_combined(df, text_col, extractor)
-    mentions = combined.select("doc_id", F.explode("entities").alias("e")).select(
-        "doc_id",
-        F.col("e.entity_name").alias("entity_name"),
-        F.col("e.entity_type").alias("entity_type"),
-        F.col("e.descriptions").alias("descriptions"),
-    )
-    triples = combined.select("doc_id", F.explode("triples").alias("t")).select(
-        "doc_id",
-        F.col("t.subj").alias("subj"),
-        F.col("t.obj").alias("obj"),
-        F.col("t.pred").alias("pred"),
-        F.col("t.weight").alias("weight"),
-    )
-    return mentions, triples
+    """Full stage: (doc_id, text) → (mentions_df, triples_df)."""
+    return explode_combined(extract_combined(df, text_col, extractor))

@@ -5,72 +5,65 @@ The reference's only global entity key is the UPPERCASED surface name
 exact-match linking.  This module adds the real thing, designed for
 10^12-doc scale:
 
-  1. **Blocking** — MinHash-LSH over the name's token set: P independent
-     min-hashes per name (md5-family, hashing.py), one blocking key per
-     (perm, min-hash) pair, candidate pairs = names sharing any key.
-     Pure DataFrame ops: explode → self-join → distinct.  Names sharing a
-     token collide with probability 1-(1-J)^P; P=12 gives >99% recall at
-     token-Jaccard ≥ 1/3 (covers abbreviation/suffix alias families).
-  2. **Verification** — a native-expression entity-resolution predicate:
+  1. **Blocking** — MinHash-LSH over the name's token set:
+     ``N_PERMUTATIONS`` independent min-hashes per name (md5 family,
+     hashing.py), one blocking key per (perm, min-hash) pair, candidate
+     pairs = names sharing any key, through the star-capped band join
+     shared with document dedup (``dedup.star_capped_pairs``).  Names
+     sharing a token collide with probability 1-(1-J)^P; P=12 gives >99%
+     recall at token-Jaccard ≥ 1/3 (covers abbreviation/suffix families).
+  2. **Verification** — an entity-resolution predicate (``names_match_py``):
      digit tokens must match exactly as multisets (rejects "March 4, 2024"
      vs "March 4, 2022"), and every word token of the shorter name must
      prefix-match a token of the longer ("A. KELLER" ≲ "ALICE KELLER",
      "ACME CORP" ≲ "ACME CORPORATION", "ZUG" ≲ "ZUG CITY").
-     No Python — array higher-order functions only.
-  3. **Connected components** — iterative min-label propagation over the
-     verified match edges (GraphFrames-style), driver-side loop with
-     ``localCheckpoint`` per iteration to cut lineage; alias clusters are
-     shallow so convergence is fast, and the loop is bounded.
+  3. **Connected components** — union-find on the driver for
+     dimension-scale edge sets, large-star/small-star rounds in Spark
+     beyond that; labels are the minimum 60-bit name hash per component.
   4. **Canonical election** — per component, the most-mentioned surface
-     form wins (ties: lexicographic min) via one window rank.
+     form wins (ties: lexicographic min).
   5. **Rewrite** — triples' subj/obj mapped through the canonical map
      (broadcast when dimension-sized; AQE otherwise), and the global
      triple merge goes through two-phase SALTED aggregation
      (operators/agg.py) because entity mentions are Zipf-skewed.
 
+Steps 1-4 run either in Spark or, below ``DRIVER_LINK_MAX_NAMES``
+distinct names, in driver Python.  Both paths share ONE pure-Python core —
+``name_tokens_py``, ``name_signature``, ``names_match_py`` and the
+union-find labeller ``_component_labels`` — so they agree by construction;
+the Spark path ships the first three into Arrow-batched stages.
+
 Scale notes: step 1's join key space is (perm × hash) — uniform by
 construction; step 3 shuffles only the edge set (≪ mention count: distinct
-names only); nothing here touches per-row Python.
+names only); no per-row Python touches the mention rows.
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.hof import fresh
-from ..hashing import h60
+from ..hashing import h60, h60_py
+from .dedup import star_capped_pairs
 
 N_PERMUTATIONS = 12
 MAX_CC_ITERATIONS = 25
 
 
-# NOTE on lambda parameter names: PySpark names the SQL lambda variable
-# after the PYTHON parameter.  Same-named lambdas that end up nested in one
-# expression tree (Catalyst collapses withColumn chains!) silently resolve
-# to the wrong binding — observed as nondeterministic MinHash signatures.
-# Hence every HOF lambda in this module has a UNIQUE parameter name, and
-# the signature itself is a raw SQL expr with explicit variable names.
-
-
-def name_tokens(col) -> "F.Column":
-    """UPPER alnum word tokens of a name (native expressions)."""
-    cleaned = F.regexp_replace(F.upper(col), r"[^A-Z0-9 ]", "")
-    return F.filter(F.split(cleaned, r" +"), fresh(lambda ntk: F.length(ntk) > 0))
-
-
-def _digit_tokens(tokens) -> "F.Column":
-    return F.array_sort(F.filter(tokens, fresh(lambda dtk: dtk.rlike(r"^[0-9]+$"))))
-
-
-def _word_tokens(tokens) -> "F.Column":
-    return F.filter(tokens, fresh(lambda wtk: ~wtk.rlike(r"^[0-9]+$")))
-
-
 def name_tokens_py(name: str) -> list[str]:
-    """Python twin of name_tokens."""
-    import re
-
+    """UPPER alnum word tokens of a name."""
     return [t for t in re.sub(r"[^A-Z0-9 ]", "", name.upper()).split(" ") if t]
+
+
+def name_signature(name: str) -> list[int]:
+    """MinHash signature of the name's token set: for each permutation p,
+    the minimum ``h60_py(token + "#perm{p}")``.  Empty for a name with no
+    tokens (it joins no bucket)."""
+    toks = name_tokens_py(name)
+    if not toks:
+        return []
+    return [min(h60_py(t, f"#perm{p}") for t in toks) for p in range(N_PERMUTATIONS)]
 
 
 def names_match_py(a: str, b: str) -> bool:
@@ -86,10 +79,12 @@ def names_match_py(a: str, b: str) -> bool:
         (either direction) some token of the richer one
         ("A. KELLER" ≲ "ALICE KELLER", "ACME CORP" ≲ "ACME CORPORATION").
 
-    Python (vectorized via pandas_udf), NOT native array expressions:
-    deeply-nested higher-order-function lambdas evaluated inside a
-    collapsed join projection misfired intermittently in pyspark 4.1.2
-    (~1/20 runs merged two distinct dates) — see the module NOTE.  The
+    Python (vectorized via pandas_udf on the Spark path), NOT native array
+    expressions: deeply-nested higher-order-function lambdas evaluated
+    inside a collapsed join projection misfired intermittently in pyspark
+    4.1.2 (~1/20 runs merged two distinct dates — PySpark names the SQL
+    lambda variable after the Python parameter, and same-named lambdas
+    nested in one expression tree resolve to the wrong binding).  The
     predicate runs only on LSH candidate pairs (dimension-scale), so the
     Arrow hop costs nothing at corpus scale.
     """
@@ -120,9 +115,34 @@ def names_match_udf():
     return pandas_udf(_match, "boolean")
 
 
+def _component_labels(names, edges) -> dict[str, int]:
+    """Union-find over ``edges`` (name pairs) → {name: component label} for
+    every name in ``names`` or on an edge; the label is the minimum 60-bit
+    name hash in the component — the same label the Spark CC paths give."""
+    parent = {n: n for n in names}
+
+    def find(x: str) -> str:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+    comp_min: dict[str, int] = {}
+    for n in parent:
+        root, h = find(n), h60_py(n)
+        comp_min[root] = min(comp_min.get(root, h), h)
+    return {n: comp_min[find(n)] for n in parent}
+
+
 # Full-pair cutover for one (perm, minv) bucket in the name LSH; larger
 # buckets emit star edges to the bucket min (k−1 rows instead of k²/2 —
-# the operators/dedup.candidate_edges decision applied to the name path,
+# the dedup.star_capped_pairs cap that document dedup uses too,
 # VERDICT r03 #3).  A bucket this size is overwhelmingly a same-token-set
 # name family (permuted word orders), where names_match verifies every
 # pair anyway, so the star keeps the connected components exact; for a
@@ -132,42 +152,32 @@ def names_match_udf():
 MAX_NAME_BUCKET = 4096
 
 
-def candidate_pairs(names: DataFrame, n_perm: int = N_PERMUTATIONS,
-                    max_bucket: int = MAX_NAME_BUCKET) -> DataFrame:
-    """names(name) → distinct (name_a < name_b) candidate pairs via LSH.
+def candidate_pairs(names: DataFrame, max_bucket: int = MAX_NAME_BUCKET) -> DataFrame:
+    """names(name) → distinct (name_a < name_b) candidate pairs via LSH
+    (star edges ``(bucket min, name)`` in buckets over ``max_bucket``).
 
     Self-join key = (permutation index, min-hash value): uniform hash
     domain, so no skewed join keys regardless of token distribution —
     but a duplicate NAME FAMILY shares whole buckets, hence the
     ``max_bucket`` star fallback above.
 
-    The signature is computed in one Arrow-batched stage with hashlib —
-    byte-identical to hashing.h60_py, immune to the Catalyst HOF pitfalls
-    documented in this module's NOTE, and ~10× faster than interpreted
-    nested transforms.  Names are dimension-sized, so the stage is cheap.
+    The signature (``name_signature``) is computed in one Arrow-batched
+    stage — byte-identical to the driver path and ~10× faster than
+    interpreted nested transforms.  Names are dimension-sized, so the
+    stage is cheap.
     """
-    import re as _re
-
     from pyspark.sql import types as T
 
     def sig_batches(batches):
-        import hashlib
-
         import pandas as pd
-
-        def h60(s: str) -> int:
-            return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
         for pdf in batches:
             out_n, out_p, out_m = [], [], []
             for name in pdf["name"]:
-                toks = [t for t in _re.sub(r"[^A-Z0-9 ]", "", name.upper()).split(" ") if t]
-                if not toks:
-                    continue
-                for p in range(n_perm):
+                for p, minv in enumerate(name_signature(name)):
                     out_n.append(name)
                     out_p.append(p)
-                    out_m.append(min(h60(f"{t}#perm{p}") for t in toks))
+                    out_m.append(minv)
             yield pd.DataFrame({"name": out_n, "perm": out_p, "minv": out_m})
 
     schema = T.StructType([
@@ -183,29 +193,8 @@ def candidate_pairs(names: DataFrame, n_perm: int = N_PERMUTATIONS,
         .persist()
     )
     sig.count()
-    sizes = sig.groupBy("perm", "minv").agg(F.count("*").alias("_k"))
-    big_keys = sizes.filter(F.col("_k") > max_bucket).select("perm", "minv")
-    normal = sig.join(F.broadcast(big_keys), ["perm", "minv"], "left_anti")
-    left = normal.alias("a")
-    right = normal.alias("b")
-    pairs = (
-        left.join(
-            right,
-            (F.col("a.perm") == F.col("b.perm"))
-            & (F.col("a.minv") == F.col("b.minv"))
-            & (F.col("a.name") < F.col("b.name")),
-        )
-        .select(F.col("a.name").alias("name_a"), F.col("b.name").alias("name_b"))
-    )
-    fam = sig.join(F.broadcast(big_keys), ["perm", "minv"], "left_semi")
-    mins = fam.groupBy("perm", "minv").agg(F.min("name").alias("_m"))
-    stars = (
-        fam.join(F.broadcast(mins), ["perm", "minv"])
-        .filter(F.col("name") != F.col("_m"))
-        .select(F.col("_m").alias("name_a"), F.col("name").alias("name_b"))
-    )
     out = (
-        pairs.unionByName(stars)
+        star_capped_pairs(sig, ["perm", "minv"], "name", ("name_a", "name_b"), max_bucket)
         .distinct()
         # materialize the (small) pair set so the signature cache can be freed
         .localCheckpoint()
@@ -214,9 +203,9 @@ def candidate_pairs(names: DataFrame, n_perm: int = N_PERMUTATIONS,
     return out
 
 
-def match_edges(names: DataFrame, n_perm: int = N_PERMUTATIONS) -> DataFrame:
+def match_edges(names: DataFrame) -> DataFrame:
     """Verified duplicate-name edges (name_a, name_b)."""
-    pairs = candidate_pairs(names, n_perm)
+    pairs = candidate_pairs(names)
     match = names_match_udf()
     return pairs.filter(match(F.col("name_a"), F.col("name_b"))).select(
         "name_a", "name_b"
@@ -290,31 +279,11 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
 
 
 def _connected_components_driver(nodes: DataFrame, edge_rows: list) -> DataFrame:
-    from ..hashing import h60_py
-
-    spark = nodes.sparkSession
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for r in edge_rows:
-        for n in (r["name_a"], r["name_b"]):
-            parent.setdefault(n, n)
-        ra, rb = find(r["name_a"]), find(r["name_b"])
-        if ra != rb:
-            parent[ra] = rb
-    comp_min: dict[str, int] = {}
-    for n in list(parent):
-        root = find(n)
-        h = h60_py(n)
-        comp_min[root] = min(comp_min.get(root, h), h)
-    labels = [(n, comp_min[find(n)]) for n in parent]
     from ..functions.localrel import local_df
-    linked = local_df(spark, labels, "name string, component long")
+
+    labels = _component_labels((), ((r["name_a"], r["name_b"]) for r in edge_rows))
+    linked = local_df(nodes.sparkSession, list(labels.items()),
+                      "name string, component long")
     all_names = nodes.select("name").distinct()
     return (
         all_names.join(F.broadcast(linked), "name", "left")
@@ -438,29 +407,23 @@ DRIVER_LINK_MAX_NAMES = 20_000
 DRIVER_LINK_MAX_PAIRS = 5_000_000
 
 
-def _canonicalize_driver(spark, rows, n_perm: int = N_PERMUTATIONS,
-                         max_bucket: int = MAX_NAME_BUCKET,
+def _canonicalize_driver(spark, rows, max_bucket: int = MAX_NAME_BUCKET,
                          max_pairs: int = DRIVER_LINK_MAX_PAIRS
                          ) -> "DataFrame | None":
     """Driver twin of the Spark linking path over collected
-    (name, n_mentions, entity_type) rows — semantics mirrored exactly:
-    candidate_pairs' (perm, min-hash) bucketing with the star cap,
-    names_match_py verification, union-find CC with min-h60 component
-    labels, and the most-mentioned-then-lex-min election.  Returns None
-    (caller → Spark path) if the candidate-pair set exceeds
-    ``max_pairs``."""
-    from ..hashing import h60_py
+    (name, n_mentions, entity_type) rows, on the shared core:
+    ``name_signature`` buckets with the star cap, ``names_match_py``
+    verification, ``_component_labels`` CC, and the most-mentioned-then-
+    lex-min election.  Returns None (caller → Spark path) if the
+    candidate-pair set exceeds ``max_pairs``."""
+    from ..functions.localrel import local_df
 
     stats = {r["name"]: (r["n_mentions"], r["entity_type"]) for r in rows}
     names = list(stats)
     buckets: dict[tuple[int, int], list[str]] = {}
     for name in names:
-        toks = name_tokens_py(name)
-        if not toks:
-            continue
-        for p in range(n_perm):
-            mv = min(h60_py(f"{t}#perm{p}") for t in toks)
-            buckets.setdefault((p, mv), []).append(name)
+        for key in enumerate(name_signature(name)):
+            buckets.setdefault(key, []).append(name)
     pairs: set[tuple[str, str]] = set()
     for members in buckets.values():
         if len(members) <= max_bucket:
@@ -475,37 +438,24 @@ def _canonicalize_driver(spark, rows, n_perm: int = N_PERMUTATIONS,
                     pairs.add((m, x))
         if len(pairs) > max_pairs:
             return None
-    parent = {n: n for n in names}
-
-    def find(x: str) -> str:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        if names_match_py(a, b):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[ra] = rb
-    comp_members: dict[str, list[str]] = {}
+    # names_match_py is resolved as a module global at call time, so a
+    # replaced predicate (e.g. a counting wrapper) applies here too
+    labels = _component_labels(names, (p for p in pairs if names_match_py(*p)))
+    comp_members: dict[int, list[str]] = {}
     for n in names:
-        comp_members.setdefault(find(n), []).append(n)
+        comp_members.setdefault(labels[n], []).append(n)
     out = []
-    for members in comp_members.values():
-        comp = min(h60_py(n) for n in members)
+    for comp, members in comp_members.items():
         canonical = min(members, key=lambda n: (-stats[n][0], n))
         cid = h60_py(canonical)
         for n in members:
             out.append((n, comp, canonical, cid, stats[n][1], stats[n][0]))
     schema = ("name string, component long, canonical_name string, "
               "canonical_id long, entity_type string, n_mentions long")
-    from ..functions.localrel import local_df
     return local_df(spark, out, schema)
 
 
-def canonicalize(mentions: DataFrame, n_perm: int = N_PERMUTATIONS,
-                 metrics: dict | None = None,
+def canonicalize(mentions: DataFrame, metrics: dict | None = None,
                  driver_max_names: int = DRIVER_LINK_MAX_NAMES) -> DataFrame:
     """mentions(doc_id, entity_name, entity_type, …) → canonical entity map:
 
@@ -545,7 +495,7 @@ def canonicalize(mentions: DataFrame, n_perm: int = N_PERMUTATIONS,
     try:
         probe = counts_lazy.limit(driver_max_names + 1).collect()
         if len(probe) <= driver_max_names:
-            out = _canonicalize_driver(mentions.sparkSession, probe, n_perm)
+            out = _canonicalize_driver(mentions.sparkSession, probe)
             if out is not None:
                 if metrics is not None:
                     metrics["strategy"] = "driver"
@@ -556,7 +506,7 @@ def canonicalize(mentions: DataFrame, n_perm: int = N_PERMUTATIONS,
         counts = counts_lazy.localCheckpoint()
     finally:
         counts_lazy.unpersist()
-    edges = match_edges(counts.select("name"), n_perm)
+    edges = match_edges(counts.select("name"))
     comps = connected_components(counts.select("name"), edges, metrics=metrics)
     labeled = counts.join(comps, "name")
     w = (

@@ -93,3 +93,19 @@ def test_pipeline_deterministic_across_parallelism(spark, small_docs_df):
     b = sorted(map(tuple, merge_triples_global(ct_b)
                    .select("subj", "obj", "weight", "n_docs").collect()))
     assert a == b
+
+
+def test_build_graph_equals_pipeline_run(spark, small_docs_df, tmp_path):
+    """The two evaluations of the one stage table — lazy ``build_graph``
+    and materializing ``KGPipeline.run`` — give the same tables."""
+    mentions, canonical_triples, entities, cmap = build_graph(small_docs_df)
+    out = KGPipeline(spark, str(tmp_path / "wh")).run(small_docs_df)
+
+    def rows(df):
+        return sorted(map(repr, map(tuple, df.collect())))
+
+    assert rows(mentions) == rows(out["mentions"])
+    assert rows(cmap) == rows(out["canonical_map"])
+    assert rows(entities) == rows(out["entities"])
+    assert rows(canonical_triples) == rows(out["canonical_triples"].drop("bucket"))
+    assert len(rows(canonical_triples)) > 0

@@ -5,7 +5,8 @@ tests pin the two changes that replaced an implementation rather than a
 plan shape:
 
   * ``rule_extract`` (literal-scan finditer emulation) must be
-    byte-identical to the combined-regex baseline ``rule_extract_re``;
+    byte-identical to the combined-regex baseline ``rule_extract_re``
+    below;
   * ``linking.canonicalize`` driver path (count-gated LSH+ER+CC+election
     in driver Python) must equal the Spark path row-for-row.
 """
@@ -13,9 +14,59 @@ plan shape:
 from __future__ import annotations
 
 import random
+import re
 
 from mmore_spark.corpus import vocab
+from mmore_spark.corpus.oracle import entity_description
 from mmore_spark.operators import extract
+from mmore_spark.operators.extract import COMPLETION_TAG, RECORD_DELIM, TUPLE_DELIM
+
+_BASELINE: tuple | None = None
+
+
+def _combined_regex():
+    """ONE combined regex for all relation templates: an alternation of
+    per-template branches, each with alias-alternation capture groups
+    (aliases longest-first, so "Acme Corporation" wins over a prefix)."""
+    global _BASELINE
+    if _BASELINE is not None:
+        return _BASELINE
+    alias_type = {alias: etype for etype, clusters in vocab.ALIAS_CLUSTERS.items()
+                  for cluster in clusters for alias in cluster}
+    alternation = "|".join(re.escape(a) for a in sorted(alias_type, key=len, reverse=True))
+    branches = []
+    group_info: dict[int, tuple[str, float]] = {}  # subj group idx -> (pred, weight)
+    for i, (tmpl, _st, _ot, pred, weight) in enumerate(vocab.RELATION_TEMPLATES):
+        head, rest = tmpl.split("{s}")
+        mid, tail = rest.split("{o}")
+        branches.append(re.escape(head) + f"({alternation})" + re.escape(mid)
+                        + f"({alternation})" + re.escape(tail))
+        group_info[2 * i + 1] = (pred, weight)
+    _BASELINE = (re.compile("|".join(f"(?:{b})" for b in branches)), group_info, alias_type)
+    return _BASELINE
+
+
+def rule_extract_re(text: str) -> str:
+    """Reference implementation of ``extract.rule_extract`` via the
+    combined regex's ``finditer`` — the parity baseline."""
+    combined, group_info, alias_type = _combined_regex()
+    records: list[str] = []
+    for m in combined.finditer(text):
+        # lastindex is the highest matched group; subj group is the odd one
+        gi = m.lastindex - 1 if m.lastindex % 2 == 0 else m.lastindex
+        subj, obj = m.group(gi), m.group(gi + 1)
+        pred, weight = group_info[gi]
+        for name in (subj, obj):
+            etype = alias_type[name]
+            records.append(
+                f'("entity"{TUPLE_DELIM}{name}{TUPLE_DELIM}{etype}'
+                f"{TUPLE_DELIM}{entity_description(name, etype)})"
+            )
+        records.append(
+            f'("relationship"{TUPLE_DELIM}{subj}{TUPLE_DELIM}{obj}'
+            f"{TUPLE_DELIM}{pred}{TUPLE_DELIM}{weight})"
+        )
+    return RECORD_DELIM.join(records) + (RECORD_DELIM + COMPLETION_TAG if records else "")
 
 
 def _aliases() -> list[str]:
@@ -34,7 +85,7 @@ def test_rule_extract_matches_re_baseline_on_planted_corpus():
     for doc in generate_local(200, seed=7):
         text = " ".join(s["text"] for s in doc.spans if s.get("text"))
         out = extract.rule_extract(text)
-        assert out == extract.rule_extract_re(text)
+        assert out == rule_extract_re(text)
         n_nonempty += bool(out)
     assert n_nonempty > 100  # most docs carry planted relations
 
@@ -62,11 +113,11 @@ def test_rule_extract_matches_re_baseline_adversarial():
             else:
                 parts.append(rng.choice(vocab.FILLER_SENTENCES))
         text = rng.choice(["", " ", "x"]).join(parts)
-        assert extract.rule_extract(text) == extract.rule_extract_re(text), text
+        assert extract.rule_extract(text) == rule_extract_re(text), text
 
 
 def test_rule_extract_empty_and_no_match():
-    assert extract.rule_extract("") == extract.rule_extract_re("") == ""
+    assert extract.rule_extract("") == rule_extract_re("") == ""
     assert extract.rule_extract("no entities here") == ""
 
 
@@ -177,9 +228,11 @@ def test_minhash_signatures_unchanged(spark):
 def test_spread_small_scan_is_scale_adaptive(spark, tmp_path):
     """guide §2.4: the corpus round-robin spread must fire for narrow
     scans (the sandbox's single-file tables) and vanish for scans that
-    are already wide — with identical results either way."""
-    from mmore_spark.functions.scanspread import (
-        estimated_scan_partitions, spread_small_scan)
+    are already wide — with identical results either way.  Width is what
+    Spark plans: 1.5x-parallelism small files bin-pack into fewer scan
+    partitions than the session parallelism, so that scan is narrow even
+    though it has more files than cores."""
+    from mmore_spark.functions.scanspread import needs_spread, spread_small_scan
 
     parallelism = spark.sparkContext.defaultParallelism
     n_files = 2 * parallelism  # strictly wider than the session
@@ -188,24 +241,33 @@ def test_spread_small_scan_is_scale_adaptive(spark, tmp_path):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     single = str(tmp_path / "single.parquet")
     multi = str(tmp_path / "multi.parquet")
+    packed = str(tmp_path / "packed.parquet")
     df.coalesce(1).write.parquet(single)
     df.repartition(n_files).write.parquet(multi)
+    df.repartition(3 * parallelism // 2).write.parquet(packed)
 
     narrow = spark.read.parquet(single)
     wide = spark.read.parquet(multi)
-    assert estimated_scan_partitions(narrow) == 1
-    assert estimated_scan_partitions(wide) >= parallelism
-    # in-memory frames have no files -> keep the historical spread
-    assert estimated_scan_partitions(df) is None
+    small_files = spark.read.parquet(packed)
+    assert len(small_files.inputFiles()) == 3 * parallelism // 2
+    assert small_files.rdd.getNumPartitions() < parallelism
+    assert needs_spread(narrow) and needs_spread(small_files)
+    assert not needs_spread(wide)
+    # in-memory frames have no file scan -> keep the historical spread
+    assert needs_spread(df)
 
     def plan(frame):
         return frame._jdf.queryExecution().executedPlan().toString()
 
     spread_n = spread_small_scan(narrow)
     spread_w = spread_small_scan(wide)
+    spread_p = spread_small_scan(small_files)
     assert "RoundRobinPartitioning" in plan(spread_n)
+    assert "RoundRobinPartitioning" in plan(spread_p)
     assert "RoundRobinPartitioning" not in plan(spread_w)
-    assert sorted(map(tuple, spread_n.collect())) == sorted(map(tuple, spread_w.collect()))
+    expect = sorted(map(tuple, spread_w.collect()))
+    assert sorted(map(tuple, spread_n.collect())) == expect
+    assert sorted(map(tuple, spread_p.collect())) == expect
 
 
 def test_minhash_signatures_equal_on_wide_scan(spark, tmp_path):
@@ -229,21 +291,3 @@ def test_minhash_signatures_equal_on_wide_scan(spark, tmp_path):
     b = sorted(map(tuple, dedup.minhash_band_signatures(
         spark.read.parquet(multi)).collect()))
     assert a == b and len(a) == n_docs * (dedup.N_PERMUTATIONS // dedup.BAND_ROWS)
-
-
-def test_scanspread_conf_size_parsing():
-    """Human-readable maxPartitionBytes forms ('256m', '1g') must parse as
-    real byte counts — digit-stripping '256m' to 256 bytes would inflate
-    the split estimate ~10^6x and wrongly classify narrow scans as wide."""
-    from mmore_spark.functions.scanspread import _DEFAULT_SPLIT_BYTES, _parse_bytes
-
-    assert _parse_bytes("134217728b") == 134217728
-    assert _parse_bytes("134217728") == 134217728
-    assert _parse_bytes("256m") == 256 * 1024 * 1024
-    assert _parse_bytes("256MB") == 256 * 1024 * 1024
-    assert _parse_bytes("1g") == 1024 ** 3
-    assert _parse_bytes("2k") == 2048
-    assert _parse_bytes("") is None
-    assert _parse_bytes("abc") is None
-    assert _parse_bytes("12parsecs") is None
-    assert _DEFAULT_SPLIT_BYTES == 128 * 1024 * 1024
